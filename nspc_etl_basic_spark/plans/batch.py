@@ -22,8 +22,10 @@ metadata tables, never a local checkpoint file:
     loader.py:1604-1619).
   - H11: one batch summary email after the final update.
 
-At scale the driver loop is I/O-light (each iteration launches 2-3 Spark
-jobs that are themselves distributed); for many small files, the
+At scale the driver loop is I/O-light: each file launches its
+``process_file`` jobs (10-11 for a small strict load, measured), and the
+checkpoint lookups and batch events read and write the metadata tables
+on the driver without a Spark job. For many small files, the
 streaming ingest path (streaming/ingest.py, Trigger.AvailableNow) is the
 idiomatic alternative — this module is the semantic-parity batch path.
 """
@@ -80,27 +82,24 @@ class BatchJobManager:
         max_age_h = float(bcfg.get("max_resume_age_hours", 24))
         cutoff = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None) - _dt.timedelta(hours=max_age_h)
 
-        from pyspark.sql import functions as F
-
-        candidates = (
-            self.meta.current_batches()
-            .filter(
-                (F.col("DirectoryPath") == self.directory_path)
-                & F.col("BatchStatus").isin("InProgress", "Failed")
-                & (F.col("BatchStartTime") > F.lit(cutoff))
+        candidates = [
+            b
+            for b in self.meta.latest_batch_events(
+                ["BatchStatus", "BatchStartTime", "TotalFiles", "FilesProcessed", "FilesFailed"],
+                DirectoryPath=self.directory_path,
             )
-            .orderBy(F.col("BatchStartTime").desc())
-            .limit(1)
-            .collect()
-        )
+            if b["BatchStatus"] in ("InProgress", "Failed")
+            and b["BatchStartTime"] is not None
+            and b["BatchStartTime"] > cutoff
+        ]
         if candidates:
-            row = candidates[0]
-            remaining = (row.TotalFiles or 0) - (row.FilesProcessed or 0) - (
-                row.FilesFailed or 0
+            row = max(candidates, key=lambda b: b["BatchStartTime"])
+            remaining = (row["TotalFiles"] or 0) - (row["FilesProcessed"] or 0) - (
+                row["FilesFailed"] or 0
             )
             if remaining > 0:
-                logger.info("resuming batch %s (%d files remaining)", row.BatchJobID, remaining)
-                return row.BatchJobID, True
+                logger.info("resuming batch %s (%d files remaining)", row["BatchJobID"], remaining)
+                return row["BatchJobID"], True
         return str(uuid.uuid4()), False
 
     def get_pending_files(self, all_files: list[str], batch_job_id: str) -> list[str]:
@@ -147,16 +146,12 @@ def process_directory(
 
     prior_processed = prior_failed = 0
     if is_resumed:
-        from pyspark.sql import functions as F
-
-        cur = (
-            meta.current_batches()
-            .filter(F.col("BatchJobID") == batch_job_id)
-            .collect()
+        cur = meta.latest_batch_events(
+            ["FilesProcessed", "FilesFailed"], BatchJobID=batch_job_id
         )
         if cur:
-            prior_processed = cur[0].FilesProcessed or 0
-            prior_failed = cur[0].FilesFailed or 0
+            prior_processed = cur[0]["FilesProcessed"] or 0
+            prior_failed = cur[0]["FilesFailed"] or 0
 
     meta.append_batch_event(
         {

@@ -2,10 +2,15 @@
 
 Spark lifecycle (SURVEY.md §3.1): path -> spark.read (lazy) -> inference
 aggregation job -> StructType -> cast/validate projection -> validity split
--> write job -> metadata append -> file lifecycle move. 2-3 Spark jobs per
-file, driver-orchestrated; the per-file granularity is semantic (one file ->
-one table, retry/resume unit), so we keep the driver loop and parallelize
-WITHIN each file via Spark.
+-> write job -> metadata append (driver-side, no Spark job) -> file
+lifecycle move. Driver-orchestrated, with a measured 10-11 Spark jobs per
+file for a small strict drop_recreate load and 17 per file for the
+benchmark's merge mix (``perfbench/run.py --trace 1``,
+``plans.pipeline.jobs_per_file``), most of them schema inference and
+process_file's own ``count()``/``collect()`` actions. The
+per-file granularity is semantic (one file -> one table, retry/resume
+unit), so we keep the driver loop and parallelize WITHIN each file via
+Spark.
 
 Transaction semantics:
   strict   = all-or-nothing: any invalid row -> no write, file -> error/
@@ -342,7 +347,7 @@ def process_file(
             )
 
         if invalid_count > 0 and not dry_run:
-            meta.write_invalid_rows(invalid, job_run_id, table_name)
+            meta.write_invalid_rows(invalid, job_run_id, table_name, invalid_count)
             logger.info("%d invalid row(s) recorded for %s", invalid_count, table_name)
             if log_artifacts:
                 # bounded: tolerant mode capped this at max-row-errors above

@@ -6,16 +6,38 @@ Append-only Parquet tables with the reference's exact column sets:
   - EtlBatchJobStatistics (loader.py:574-587 + enhanced cols :253-291)
 
 Batch resume needs "latest state per BatchJobID"; with an append-only
-store that is a last-write-wins read (window on EventSeq) rather than SQL
+store that is a last-write-wins read (highest EventSeq) rather than SQL
 UPDATE — the Spark-native equivalent of the reference's in-place updates.
+
+Driver-sized traffic never starts a Spark job. A statistics, error,
+quality or batch append is a handful of rows the driver already holds:
+it is written with pyarrow as a hidden ``.part-<uuid>.parquet.tmp`` in
+the table directory, then ``os.replace``d to ``part-<uuid>.parquet``.
+Spark, pyarrow datasets and ``ParquetWarehouse.exists`` skip the hidden
+name, so a crash mid-write leaves no visible partial file. The replace is
+atomic on a local (POSIX) filesystem, the same assumption the snapshot
+sink's ``_current`` flip makes. The checkpoint lookups
+(``completed_files``, ``latest_batch_events``) read with
+``pyarrow.dataset`` and return plain rows. Only corpus-sized traffic
+(``write_invalid_rows``) and the DataFrame readers use Spark.
+
+Timestamps are stored as ``timestamp[us, UTC]``: the engine's naive
+datetimes are UTC by construction, and the UTC annotation makes Spark read
+the column back as ``TimestampType`` (not ``TIMESTAMP_NTZ``). Files Spark
+wrote earlier (INT96 timestamps) read through the same explicit arrow
+schema, so mixed-writer tables unify.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -84,6 +106,34 @@ QUALITY_SCHEMA = T.StructType(
 )
 
 
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.LongType(): pa.int64(),
+    T.DoubleType(): pa.float64(),
+    T.BooleanType(): pa.bool_(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_schema(struct: T.StructType) -> pa.Schema:
+    return pa.schema(
+        [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in struct.fields]
+    )
+
+
+def _naive_utc(table: pa.Table) -> pa.Table:
+    """``table`` with UTC timestamps as naive UTC — the engine's datetime
+    convention — so plain rows compare with ``datetime.now(utc)`` values."""
+    return table.cast(
+        pa.schema(
+            [
+                f.with_type(pa.timestamp(f.type.unit)) if pa.types.is_timestamp(f.type) else f
+                for f in table.schema
+            ]
+        )
+    )
+
+
 class MetadataStore:
     def __init__(self, warehouse: ParquetWarehouse, config: dict | None = None):
         self.wh = warehouse
@@ -97,12 +147,47 @@ class MetadataStore:
             "table_name", "EtlQualityCheck"
         )
 
+    # ---- driver-side append and lookup (no Spark job)
+    def _append(self, table: str, schema: T.StructType, rows: list[dict]) -> None:
+        """Write ``rows`` as one new parquet file of ``table``: hidden
+        temp name first, then an atomic rename to the visible name. Keys
+        outside ``schema`` are dropped; missing ones are NULL."""
+        data = pa.Table.from_pylist(rows, schema=_arrow_schema(schema))
+        # parquet writes a NULL in a required column as a corrupt file
+        for f in data.schema:
+            if not f.nullable and data.column(f.name).null_count:
+                raise ValueError(f"{table}.{f.name} is not nullable, but got None")
+        table_dir = self.wh.table_path(table)
+        os.makedirs(table_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(table_dir, f".{name}.tmp")
+        try:
+            pq.write_table(data, tmp)
+            os.replace(tmp, os.path.join(table_dir, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+
+    def _scan(
+        self, table: str, schema: T.StructType, columns: list[str], **where
+    ) -> list[dict]:
+        """Rows of ``table`` whose columns equal ``where``, projected to
+        ``columns``, read on the driver."""
+        if not self.wh.exists(table):
+            return []
+        pred = None
+        for col, value in where.items():
+            term = ds.field(col) == value
+            pred = term if pred is None else pred & term
+        found = ds.dataset(
+            self.wh.data_path(table), format="parquet", schema=_arrow_schema(schema)
+        ).to_table(columns=columns, filter=pred)
+        return _naive_utc(found).to_pylist()
+
     # ---- H8: job statistics
     def write_statistics(self, stats: dict) -> None:
-        spark = self.wh.spark
-        row = {f.name: stats.get(f.name) for f in JOB_STATS_SCHEMA.fields}
-        df = spark.createDataFrame([row], schema=JOB_STATS_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.stats_table))
+        self._append(self.stats_table, JOB_STATS_SCHEMA, [stats])
 
     def read_statistics(self) -> DataFrame:
         if not self.wh.exists(self.stats_table):
@@ -127,17 +212,18 @@ class MetadataStore:
             "ErrorMessage": error_message,
             "ErrorTimestamp": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
         }
-        df = self.wh.spark.createDataFrame([row], schema=ERROR_LOG_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.error_table))
+        self._append(self.error_table, ERROR_LOG_SCHEMA, [row])
 
-    def write_invalid_rows(self, invalid: DataFrame, job_run_id: str, table_name: str) -> int:
+    def write_invalid_rows(
+        self, invalid: DataFrame, job_run_id: str, table_name: str, invalid_count: int
+    ) -> int:
         """Distributed error sink: one EtlJobError row per invalid source
         row (G2's failed-row log), written as a single Spark job — no
-        driver-side iteration."""
+        driver-side iteration. ``invalid_count`` is the caller's count of
+        ``invalid`` (the validation gate already ran it)."""
         from nspc_etl_basic_spark.operators.cast import ERROR_COL
 
-        n = invalid.count()
-        if n == 0:
+        if invalid_count == 0:
             return 0
         rows = invalid.select(
             F.expr("uuid()").alias("ErrorID"),
@@ -151,7 +237,7 @@ class MetadataStore:
             F.current_timestamp().alias("ErrorTimestamp"),
         )
         rows.write.mode("append").parquet(self.wh.table_path(self.error_table))
-        return n
+        return invalid_count
 
     def read_error_log(self) -> DataFrame:
         if not self.wh.exists(self.error_table):
@@ -176,8 +262,7 @@ class MetadataStore:
             }
             for r in results
         ]
-        df = self.wh.spark.createDataFrame(rows, schema=QUALITY_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.quality_table))
+        self._append(self.quality_table, QUALITY_SCHEMA, rows)
 
     def read_quality_results(self) -> DataFrame:
         if not self.wh.exists(self.quality_table):
@@ -186,9 +271,7 @@ class MetadataStore:
 
     # ---- H10: batch statistics (append-only, last EventSeq wins)
     def append_batch_event(self, event: dict) -> None:
-        row = {f.name: event.get(f.name) for f in BATCH_STATS_SCHEMA.fields}
-        df = self.wh.spark.createDataFrame([row], schema=BATCH_STATS_SCHEMA)
-        df.write.mode("append").parquet(self.wh.table_path(self.batch_table))
+        self._append(self.batch_table, BATCH_STATS_SCHEMA, [event])
 
     def current_batches(self) -> DataFrame:
         """Latest event per BatchJobID (reference's UPDATE-in-place read
@@ -199,16 +282,24 @@ class MetadataStore:
         w = Window.partitionBy("BatchJobID").orderBy(F.col("EventSeq").desc())
         return df.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
+    def latest_batch_events(self, columns: list[str], **where) -> list[dict]:
+        """``current_batches()`` read on the driver, as plain rows: the
+        highest-EventSeq event per BatchJobID among the events whose
+        columns equal ``where``. Every event of a batch carries the same
+        BatchJobID and DirectoryPath, so filtering on either before the
+        last-wins pick selects whole batches."""
+        latest: dict[str, dict] = {}
+        cols = list(dict.fromkeys(["BatchJobID", "EventSeq", *columns]))
+        for r in self._scan(self.batch_table, BATCH_STATS_SCHEMA, cols, **where):
+            cur = latest.get(r["BatchJobID"])
+            if cur is None or r["EventSeq"] > cur["EventSeq"]:
+                latest[r["BatchJobID"]] = r
+        return list(latest.values())
+
     # ---- D3: completed-file set for checkpoint anti-join
     def completed_files(self, batch_job_id: str) -> set[str]:
-        stats = self.read_statistics()
-        rows = (
-            stats.filter(
-                (F.col("BatchJobID") == batch_job_id)
-                & (F.col("JobStatus") == "Completed")
-            )
-            .select("SourceFile")
-            .distinct()
-            .collect()
+        rows = self._scan(
+            self.stats_table, JOB_STATS_SCHEMA, ["SourceFile"],
+            BatchJobID=batch_job_id, JobStatus="Completed",
         )
         return {r["SourceFile"] for r in rows}

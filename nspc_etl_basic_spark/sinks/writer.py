@@ -35,8 +35,13 @@ Single writer per table is assumed — the same model as the reference
 party the protocol protects.
 
 Append-only tables (the EtlJob* metadata sinks) keep the plain flat-dir
-layout: appends add new immutable files, which is already object-store
-safe, and last-write-wins readers tolerate in-flight files. ``read()`` /
+layout: each append adds one new immutable file. ``MetadataStore`` writes
+its driver-sized appends with pyarrow, no Spark job: a hidden
+``.part-<uuid>.parquet.tmp`` in the table dir, then ``os.replace`` to
+``part-<uuid>.parquet``. Readers (Spark, pyarrow, ``exists()``) skip the
+hidden name, so they never see a partial file. The rename is atomic on a
+local POSIX filesystem only; an object-store warehouse would need a
+single-object PUT here instead, as for ``_current``. ``read()`` /
 ``exists()`` resolve the manifest when present and fall back to the plain
 path, so legacy/unversioned tables keep working.
 """

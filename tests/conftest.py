@@ -110,9 +110,25 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched = set()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        name = item.name.split("[")[0]
+        if name in SLOW_TESTS:
+            matched.add(name)
             item.add_marker(pytest.mark.slow)
+    # A renamed or deleted test would silently fall back into the default
+    # tier under its new name, so a SLOW_TESTS entry must name a real test.
+    # Checked only when every test module was collected (runs of a subset
+    # of files, or with a module that failed to import, cannot tell).
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    modules = {
+        f for f in os.listdir(tests_dir) if f.startswith("test_") and f.endswith(".py")
+    }
+    stale = SLOW_TESTS - matched
+    if stale and modules <= {item.path.name for item in items}:
+        raise pytest.UsageError(
+            f"SLOW_TESTS names that match no collected test: {sorted(stale)}"
+        )
 
 
 @pytest.fixture(scope="session")
