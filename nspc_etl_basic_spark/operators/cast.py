@@ -17,7 +17,9 @@ engine's contract (SURVEY.md §4.2, documented deviation) is:
 Everything is a single Catalyst projection + two complementary filters —
 whole-stage-codegen, no Python in the row path. The validity predicate and
 the cast share subexpressions, so the scan is read once per split (or once
-total if the caller caches).
+total if the caller caches). The frame both splits filter is returned too,
+so the row and reject counts come from ONE aggregate over it
+(``validation_counts``) instead of a count per split.
 """
 
 from __future__ import annotations
@@ -56,15 +58,17 @@ def _cast_expr(col: Column, dtype: T.DataType) -> Column:
 
 def cast_and_split(
     df: DataFrame, schema: T.StructType, keep_extra_cols: bool = True
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Project/cast ``df`` (all-string) onto ``schema``; return
-    ``(valid, invalid)``.
+    ``(valid, invalid, checked)``.
 
     ``valid`` has exactly the schema's columns with target types (plus any
     passthrough ``__``-prefixed engine columns when ``keep_extra_cols``).
     ``invalid`` keeps the ORIGINAL string values plus an ``__errors``
     array<string> column naming each failed column — the error-log sink
-    (H9) consumes it.
+    (H9) consumes it. ``checked`` is ``df`` plus that ``__errors`` column,
+    unfiltered: the frame both splits are filters of, which
+    ``validation_counts`` aggregates.
 
     A row is invalid when:
       * a non-null input value cast to NULL for an INT/DECIMAL column (the
@@ -113,4 +117,14 @@ def cast_and_split(
     invalid = with_err.filter(F.size(ERROR_COL) > 0).select(
         *[F.col(f.name) for f in schema.fields], *extra, F.col(ERROR_COL)
     )
-    return valid, invalid
+    return valid, invalid, with_err
+
+
+def validation_counts(checked: DataFrame) -> tuple[int, int]:
+    """``(rows, invalid rows)`` of a ``cast_and_split`` build in ONE
+    aggregate job over its ``checked`` frame — the pre-sink numbers the
+    strict and tolerant gates need, without a count per split."""
+    row = checked.agg(
+        F.count(F.lit(1)), F.count_if(F.size(ERROR_COL) > 0)
+    ).first()
+    return int(row[0]), int(row[1])

@@ -17,16 +17,18 @@ Scale notes:
     map-only plan over the target);
   - insert/update split (D2 semantics — the reference's batch path
     miscounts, acknowledged at loader.py:1294-1297; we compute the true
-    split) reuses the same broadcast via semi/anti counts;
+    split) rides on the snapshot write itself: ``DataFrame.observe``
+    counts the target, the anti-join's kept rows and the written rows
+    while the write runs, so the split costs no Spark job of its own;
   - last-wins dedup (E1) windows on the per-file ``__seq`` order BEFORE any
     shuffle, because input order is semantic (SURVEY.md §7.2 item 1).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -37,6 +39,38 @@ from nspc_etl_basic_spark.sources.reader import SEQ_COL
 class MergeCounts:
     inserted: int
     updated: int
+
+
+class RowCount:
+    """A row count taken on a job that runs anyway: ``on(df)`` attaches a
+    ``count(*)`` observation (unnamed, so a UUID name) and ``value`` reads
+    it once an action over the returned frame has finished.
+
+    The observed subtree must run in that action — ``value`` blocks until
+    the metric arrives. Spark keeps one value per observation name, so a
+    subtree the physical plan runs twice still reports its own row count,
+    not the sum over both runs."""
+
+    def __init__(self) -> None:
+        self._obs = Observation()
+
+    def on(self, df: DataFrame) -> DataFrame:
+        return df.observe(self._obs, F.count(F.lit(1)).alias("rows"))
+
+    @property
+    def value(self) -> int:
+        return int(self._obs.get["rows"])
+
+
+@dataclass
+class MergeObservations:
+    """The counts ``merge_upsert`` attaches to its snapshot: target rows
+    (the stream side of the anti-join, scanned once), target rows the
+    anti-join kept, and rows written."""
+
+    target: RowCount = field(default_factory=RowCount)
+    kept: RowCount = field(default_factory=RowCount)
+    written: RowCount = field(default_factory=RowCount)
 
 
 def dedup_last_wins(df: DataFrame, pk_cols: list[str], order_col: str = SEQ_COL) -> DataFrame:
@@ -64,6 +98,7 @@ def merge_upsert(
     source: DataFrame,
     pk_cols: list[str],
     broadcast_source: bool | None = None,
+    observed: MergeObservations | None = None,
 ) -> DataFrame:
     """D1: join-based MERGE — returns the post-merge snapshot.
 
@@ -71,36 +106,37 @@ def merge_upsert(
     ``broadcast_source=None`` auto-broadcasts (file-sized sources vs large
     targets is the reference's only workload shape); pass False for
     symmetric-size merges so Catalyst/AQE picks a shuffled join.
+
+    ``observed`` attaches the row counts ``merge_counts`` reads once the
+    snapshot is written. The source is never observed: it is both the
+    broadcast side and a union leg, so the plan runs it twice.
     """
     src = source.select(*target.columns)
+    if observed is not None:
+        target = observed.target.on(target)
     join_side = F.broadcast(src) if broadcast_source is not False else src
     kept = target.join(join_side, on=pk_cols, how="left_anti")
-    return kept.unionByName(src)
+    if observed is None:
+        return kept.unionByName(src)
+    return observed.written.on(observed.kept.on(kept).unionByName(src))
 
 
-def merge_counts(target: DataFrame, source: DataFrame, pk_cols: list[str]) -> MergeCounts:
-    """D2 semantics: true inserted/updated split via semi/anti joins (the
-    reference's per-row path returns this; its batch MERGE path admits to
-    counting everything as updates — we implement the correct split,
-    SURVEY.md §4.1 'deviation-to-correctness').
+def merge_counts(observed: MergeObservations) -> MergeCounts:
+    """D2 semantics: the true inserted/updated split (the reference's
+    per-row path returns this; its batch MERGE path admits to counting
+    everything as updates — we implement the correct split, SURVEY.md
+    §4.1 'deviation-to-correctness').
 
-    Broadcasts the SOURCE keys (file-sized) and scans only the target's
-    pk columns (column-pruned), so the large target is never shuffled or
-    broadcast: the target snapshot maintains PK uniqueness (merge_upsert
-    anti-join + E1 dedup), so the matched count is a broadcast-semi scan
-    with NO exchange on the target side. The source-key set is built once
-    and cached for its two tiny jobs (total + matched)."""
-    src_keys = source.select(*pk_cols).distinct().cache()
-    try:
-        total = src_keys.count()
-        updated = (
-            target.select(*pk_cols)
-            .join(F.broadcast(src_keys), on=pk_cols, how="left_semi")
-            .count()
-        )
-    finally:
-        src_keys.unpersist()
-    return MergeCounts(inserted=total - updated, updated=updated)
+    Reads the counts ``merge_upsert(..., observed=...)`` attached, so call
+    it after the snapshot write returns; it runs no Spark job. The target
+    snapshot keeps the PK unique (anti-join + E1 dedup), so every target
+    row the anti-join dropped is one updated key, and every written row
+    beyond the target's is an inserted key."""
+    target = observed.target.value
+    return MergeCounts(
+        inserted=observed.written.value - target,
+        updated=target - observed.kept.value,
+    )
 
 
 def merge_changes(

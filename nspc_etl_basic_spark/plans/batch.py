@@ -23,7 +23,7 @@ metadata tables, never a local checkpoint file:
   - H11: one batch summary email after the final update.
 
 At scale the driver loop is I/O-light: each file launches its
-``process_file`` jobs (10-11 for a small strict load, measured), and the
+``process_file`` jobs (8-9 for a small strict load, measured), and the
 checkpoint lookups and batch events read and write the metadata tables
 on the driver without a Spark job. For many small files, the
 streaming ingest path (streaming/ingest.py, Trigger.AvailableNow) is the

@@ -3,14 +3,16 @@
 Spark lifecycle (SURVEY.md §3.1): path -> spark.read (lazy) -> inference
 aggregation job -> StructType -> cast/validate projection -> validity split
 -> write job -> metadata append (driver-side, no Spark job) -> file
-lifecycle move. Driver-orchestrated, with a measured 10-11 Spark jobs per
-file for a small strict drop_recreate load and 17 per file for the
-benchmark's merge mix (``perfbench/run.py --trace 1``,
-``plans.pipeline.jobs_per_file``), most of them schema inference and
-process_file's own ``count()``/``collect()`` actions. The
-per-file granularity is semantic (one file -> one table, retry/resume
-unit), so we keep the driver loop and parallelize WITHIN each file via
-Spark.
+lifecycle move. Driver-orchestrated, with a measured 8.5 Spark jobs per
+file for the benchmark's small strict drop_recreate loads and 10.75 per
+file for its merge mix (``perfbench/run.py --trace 1``,
+``plans.pipeline.jobs_per_file``). No statistic has a Spark action of its
+own: rows read and rows failed come from one validation aggregate (the
+one job strict mode needs before the sink), and the merge/scd2
+inserted/updated counts are ``DataFrame.observe`` metrics of the snapshot
+write. The per-file granularity is semantic (one file -> one table,
+retry/resume unit), so we keep the driver loop and parallelize WITHIN
+each file via Spark.
 
 Transaction semantics:
   strict   = all-or-nothing: any invalid row -> no write, file -> error/
@@ -37,8 +39,10 @@ from pyspark.sql import functions as F
 
 from nspc_etl_basic_spark.config import load_config
 from nspc_etl_basic_spark.naming import generate_table_name
-from nspc_etl_basic_spark.operators.cast import cast_and_split
+from nspc_etl_basic_spark.operators.cast import cast_and_split, validation_counts
 from nspc_etl_basic_spark.operators.merge import (
+    MergeObservations,
+    RowCount,
     dedup_last_wins,
     merge_counts,
     merge_upsert,
@@ -219,21 +223,12 @@ def process_file(
     logger.info("processing %s -> table %s (mode=%s, txn=%s, job=%s)",
                 file_path, table_name, mode, txn, job_run_id)
 
+    src = None
     try:
-        df = read_any(spark, file_path, with_seq=True)
-        rows_read = df.count()
-        result.rows_read = rows_read
-
-        if rows_read == 0 or not [c for c in df.columns if not c.startswith("__")]:
-            # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
-            if mode == "upsert":
-                result.status = "Validated" if dry_run else "Completed"
-                if move_files:
-                    result.moved_to = _move_file(file_path, "processed")
-                return result
-            raise ValueError(f"Empty file: {file_path}")
-
-        df = df.cache()
+        # cached before its first job: inference, the validation
+        # aggregate, the invalid-row sinks and the write all scan it
+        src = df = read_any(spark, file_path, with_seq=True).cache()
+        file_cols = [c for c in df.columns if not c.startswith("__")]
 
         # Schema authority (reference parity): for append/upsert into an
         # EXISTING table the target's schema governs the cast — the
@@ -284,13 +279,18 @@ def process_file(
             existing = mode in ("append", "upsert", "scd2") and warehouse.exists(
                 table_name
             )
+        # the one read of the snapshot target: schema authority here,
+        # merge/scd2 input at the sink
+        target = None
+        extra: list[str] = []
         if existing:
             if use_jdbc:
                 target_struct = jdbc_struct
             elif bucketed is not None:
                 target_struct = bucketed.read().schema
             else:
-                target_struct = warehouse.read(table_name).schema
+                target = warehouse.read(table_name)
+                target_struct = target.schema
             if mode == "scd2":
                 # the stored table carries interval columns instead of the
                 # feed's ts column: schema authority for the feed is the
@@ -313,12 +313,9 @@ def process_file(
                     else:
                         fields.append(f)
                 target_struct = _T.StructType(fields)
-            file_cols = [c for c in df.columns if not c.startswith("__")]
+            # raised after the validation aggregate: a header-only file
+            # stays an empty-file no-op whatever its header names
             extra = [c for c in file_cols if c not in target_struct.names]
-            if extra:
-                raise ValueError(
-                    f"columns {extra} not in existing table '{table_name}'"
-                )
             # missing target columns -> NULL (SQL INSERT column-list rule)
             for c in target_struct.names:
                 if c not in file_cols:
@@ -332,8 +329,22 @@ def process_file(
             struct = schema.struct
             result.details["sql_types"] = schema.sql_types
 
-        valid, invalid = cast_and_split(df, struct)
-        invalid_count = invalid.count()
+        valid, invalid, checked = cast_and_split(df, struct)
+        rows_read, invalid_count = validation_counts(checked)
+        result.rows_read = rows_read
+
+        if rows_read == 0 or not file_cols:
+            # A5: empty file — valid no-op in upsert mode (loader.py:1420-1432)
+            if mode == "upsert":
+                result.status = "Validated" if dry_run else "Completed"
+                if move_files:
+                    result.moved_to = _move_file(file_path, "processed")
+                return result
+            raise ValueError(f"Empty file: {file_path}")
+        if extra:
+            raise ValueError(
+                f"columns {extra} not in existing table '{table_name}'"
+            )
         result.rows_failed = invalid_count
 
         if txn == "strict" and invalid_count > 0:
@@ -456,12 +467,14 @@ def process_file(
             feed = dedup_last_wins(
                 valid, pk_cols + [ts_col], order_col=SEQ_COL
             ).select(*pk_cols, ts_col, *attr_cols, SEQ_COL)
-            prev_rows = 0
-            if warehouse.exists(table_name):
-                target = warehouse.read(table_name)
-                prev_rows = target.count()
+            # both row counts are observed on the snapshot write; the
+            # target feeds two joins, and its observation still reports
+            # the table's rows once
+            prev, committed = None, RowCount()
+            if target is not None:
+                prev = RowCount()
                 out = scd2_apply_changes(
-                    target,
+                    prev.on(target),
                     feed,
                     pk_cols, ts_col, attr_cols,
                     tiebreak_cols=[SEQ_COL],
@@ -470,24 +483,26 @@ def process_file(
                 out = scd2_from_feed(
                     feed, pk_cols, ts_col, attr_cols, tiebreak_cols=[SEQ_COL]
                 )
-            warehouse.overwrite_snapshot(out, table_name)
+            warehouse.overwrite_snapshot(committed.on(out), table_name)
             # history rows actually ADDED (a replayed file nets 0), not
             # the feed size — the job-statistics contract everywhere else
-            result.rows_inserted = max(
-                warehouse.read(table_name).count() - prev_rows, 0
-            )
+            prev_rows = prev.value if prev is not None else 0
+            result.rows_inserted = max(committed.value - prev_rows, 0)
         elif mode == "upsert":
             deduped = dedup_last_wins(valid, pk_cols, order_col=SEQ_COL)
-            if warehouse.exists(table_name):
-                target = warehouse.read(table_name)
-                counts = merge_counts(target, deduped.select(*target.columns), pk_cols)
-                merged = merge_upsert(target, deduped, pk_cols)
+            if target is not None:
+                observed = MergeObservations()
+                merged = merge_upsert(target, deduped, pk_cols, observed=observed)
                 warehouse.overwrite_snapshot(merged, table_name)
+                counts = merge_counts(observed)
                 result.rows_inserted = counts.inserted
                 result.rows_updated = counts.updated
             else:
-                warehouse.write(deduped, table_name, mode="drop_recreate")
-                result.rows_inserted = deduped.count()
+                written = RowCount()
+                warehouse.write(
+                    written.on(deduped), table_name, mode="drop_recreate"
+                )
+                result.rows_inserted = written.value
         else:
             warehouse.write(valid, table_name, mode=mode)
             result.rows_inserted = rows_read - invalid_count
@@ -521,10 +536,8 @@ def process_file(
             result.moved_to = _move_file(file_path, "error")
     finally:
         flog.__exit__()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+        if src is not None:
+            src.unpersist()
         result.duration_seconds = time.time() - t0
         if not dry_run and config.get("job_statistics", {}).get("enabled", True):
             end_ts = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)

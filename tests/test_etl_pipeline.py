@@ -201,6 +201,32 @@ def test_upsert_empty_file_is_noop(spark, tmp_path):
     assert len(_rows(spark, tmp_path, t)) == 3
 
 
+def test_upsert_header_only_unknown_column_is_noop(spark, tmp_path):
+    """An empty upsert file is a no-op even when its header names a
+    column the target lacks: the unknown-column check waits for the row
+    count. A dry run of an empty upsert file validates."""
+    t = _seed(spark, tmp_path)
+    before = _rows(spark, tmp_path, t)
+    r = _load_into(spark, tmp_path, t, "id,name,value,extra\n")
+    assert (r.status, r.rows_read, r.error_message) == ("Completed", 0, None)
+    assert _rows(spark, tmp_path, t) == before
+
+    cfg = load_config(
+        overrides={
+            "database": {"warehouse_path": str(tmp_path / "wh")},
+            "loader": UPSERT,
+            "override_table_name": t,
+        }
+    )
+    path = _write(tmp_path / "dry.csv", "id,name,value,extra\n")
+    r2 = process_file(spark, path, cfg, move_files=False, dry_run=True)
+    assert (r2.status, r2.rows_read) == ("Validated", 0)
+    # with rows, the unknown column still fails the file
+    r3 = _load_into(spark, tmp_path, t, "id,name,value,extra\n4,d,40,x\n")
+    assert r3.status == "Failed" and "['extra'] not in existing table" in r3.error_message
+    assert _rows(spark, tmp_path, t) == before
+
+
 def test_upsert_duplicate_pks_last_wins(spark, tmp_path):
     t = _seed(spark, tmp_path)
     r = _load_into(
